@@ -144,14 +144,11 @@ object DataPipeline {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    GraftSession.attach(spark)
     spark.sparkContext.setLogLevel("WARN")
     val (packed, stats) = curate(spark, sfDir)
     packed.write.mode("overwrite").partitionBy("source").parquet(s"$outDir/corpus")

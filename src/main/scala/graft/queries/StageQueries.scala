@@ -199,11 +199,16 @@ object StageQueries extends QueryFamily {
   // shape-only renormalized variant, nominal/variant ratio — the
   // datacard's numeric core. All small-data aggregation over s03's
   // output shape.
-  private def s04(s: SparkSession, dir: String): DataFrame = {
+  private def s04(s: SparkSession, dir: String): DataFrame =
     // materialize the (tiny) stage-2 histogram once: without this the
     // template stage's window+pivot would re-derive the whole lineitem
     // subtree — a harmless re-plan here, a double 100 TB scan in prod
-    val hist = s03(s, dir).localCheckpoint()
+    s04From(s03(s, dir).localCheckpoint())
+
+  /** Stage-3 yields from any table of s03's shape: the registry feeds it
+    * the checkpointed s03 plan, RunPipeline the stage-2 histogram
+    * Parquet it wrote. */
+  def s04From(hist: DataFrame): DataFrame = {
     val pivoted = hist.groupBy(col("region"), col("channel"), col("bin"))
       .agg(
         sum(when(col("variation") === "nominal", col("value"))).as("nom"),
@@ -333,12 +338,15 @@ object StageQueries extends QueryFamily {
   // ---- s05: unbinned column save (S7) ------------------------------------
   // reference: stage2/postprocessor.py:235-253 — per-channel filtered
   // projection of fit inputs.
-  private def s05(s: SparkSession, dir: String): DataFrame = {
-    val base = s01(s, dir)
-    base.filter(col("region") === "h-peak")
+  private def s05(s: SparkSession, dir: String): DataFrame = s05From(s01(s, dir))
+
+  /** The unbinned fit inputs from any table of s01's shape: the registry
+    * feeds it the s01 plan, RunPipeline the region-partitioned stage-1
+    * Parquet (the region filter then prunes partitions at the scan). */
+  def s05From(stage1: DataFrame): DataFrame =
+    stage1.filter(col("region") === "h-peak")
       .select(col("event"), col("dimuon_mass"), col("mu1_pt"))
       .orderBy(col("event"))
-  }
   private val s05Sql =
     s"""SELECT event, dimuon_mass, mu1_pt FROM (${s01Sql.replace("ORDER BY event", "")})
        |WHERE region = 'h-peak' ORDER BY event""".stripMargin

@@ -1,53 +1,121 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.classic.GraftBridge
+import org.apache.spark.sql.functions._
+import graft.queries.StageQueries
+import graft.report.Datacards
 
-/** The three-stage pipeline produces consistent artifacts end-to-end:
-  * stage-1 rows survive the region partitioning, stage-2 histogram
-  * totals equal the stage-1 population they were filled from, and
-  * stage-3 datacards exist per region. */
+/** `RunPipeline.run` end to end on sf0.001 — the reference's test
+  * philosophy (`tests/test_continuous.py:80-98`: run stage 1 → 2 → 3 on
+  * one fixture and pin ONE golden number per stage) applied to the real
+  * pipeline call, not a hand replay of it. The run's artifacts must
+  * carry the chain goldens, and the stages it derives from Parquet it
+  * read back (s05 from stage1, s04 from stage2_histograms) must equal
+  * the registry's raw-table queries. Golden tolerance mirrors the
+  * reference's `almost_equal` (abs 1e-4 on float32-valued yields; exact
+  * on counts). */
 class RunPipelineSpec extends SparkSpec {
 
-  test("stage1 -> stage2 -> stage3 artifacts are consistent") {
-    val out = Files.createTempDirectory("graft_pipeline").toString
-    val dir = sf("sf0.001")
-    // run stages through the same code path as the CLI (shared session)
-    val stage1 = queries.StageQueries.queries("s01_stage1_pipeline")(spark, dir)
-    stage1.write.mode("overwrite").partitionBy("region").parquet(s"$out/stage1")
-    val hist = queries.StageQueries.queries("s03_stage2_histograms")(spark, dir)
-    hist.write.mode("overwrite").parquet(s"$out/stage2_histograms")
-    val yields = queries.StageQueries.queries("s04_stage3_templates")(spark, dir)
-    val cards = report.Datacards.renderAll(yields)
-    cards.foreach { case (region, text) =>
-      Files.createDirectories(Paths.get(s"$out/stage3_datacards"))
-      Files.writeString(Paths.get(s"$out/stage3_datacards/$region.txt"), text)
+  private val dir = sf("sf0.001")
+  private def approx(a: Double, b: Double, tol: Double = 1e-4): Boolean =
+    math.abs(a - b) <= tol * math.max(1.0, math.abs(b))
+
+  /** Run `body`, counting the Spark jobs it launches. */
+  private def countingJobs[T](body: => T): (T, Int) = {
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      GraftBridge.drainListenerBus(spark.sparkContext, 10000L)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
-    // stage-1 round-trips through the partitioned layout
-    val back = spark.read.parquet(s"$out/stage1")
-    assert(back.count() == stage1.count() && back.count() > 0)
-    assert(back.columns.toSet == stage1.columns.toSet)
+  test("RunPipeline.run: stage artifacts carry the chain goldens") {
+    val out = Files.createTempDirectory("graft_pipeline").toString
+    val t0 = System.nanoTime()
+    val (branches, jobs) = countingJobs(RunPipeline.run(spark, dir, out))
+    val wallMs = (System.nanoTime() - t0) / 1000000L
+    assert(branches.map(_._1) == Seq("A", "B", "C", "D"))
+    info(s"$jobs jobs; branch times ${branches.map(_._2).sum} ms summed " +
+      s"in $wallMs ms wall (${branches.map { case (b, ms) => s"$b $ms" }.mkString(", ")})")
 
-    // stage-2 nominal yield equals the sum over the histogram table
-    import org.apache.spark.sql.functions._
-    val histBack = spark.read.parquet(s"$out/stage2_histograms")
-    val nomSum = histBack.filter(col("variation") === "nominal")
+    // ---- stage 1: ETL, golden row count + first event through disk -----
+    val stage1 = spark.read.parquet(s"$out/stage1")
+    assert(stage1.count() == 69L, "stage-1 golden row count")
+    val first = stage1.orderBy(col("event")).limit(1).collect()(0)
+    assert(first.getAs[Long]("event") == 2L)
+    assert(approx(first.getAs[Float]("dimuon_mass"), 110.77693, 1e-5),
+      s"stage-1 golden mass: ${first.getAs[Float]("dimuon_mass")}")
+    assert(first.getAs[String]("region") == "h-sidebands")
+
+    // ---- stage 2a: unbinned fit inputs, derived from the read-back
+    // stage 1, equal the registry's s05 over the raw tables
+    def triples(df: org.apache.spark.sql.DataFrame) = df.orderBy(col("event"))
+      .select(col("event"), col("dimuon_mass"), col("mu1_pt"))
+      .collect().map(r => (r.getLong(0), r.getFloat(1), r.getFloat(2))).toSeq
+    val unbinned = triples(spark.read.parquet(s"$out/stage2_unbinned"))
+    assert(unbinned == triples(StageQueries.queries("s05_unbinned_save")(spark, dir)),
+      "disk-chained unbinned inputs diverge from s05")
+    assert(unbinned.length == 23, "stage-2 golden unbinned row count")
+
+    // ---- stage 2b: histogram table, golden nominal h-peak mass yield ----
+    val hist = spark.read.parquet(s"$out/stage2_histograms")
+    val nomHPeak = hist.filter(col("variation") === "nominal" &&
+        col("region") === "h-peak")
+      .agg(sum(col("value"))).collect()(0).getDouble(0)
+    assert(approx(nomHPeak, 196.58312), s"stage-2 golden yield: $nomHPeak")
+
+    // ---- stage 2c: the variation table carries the reference width -----
+    val nVar = spark.read.parquet(s"$out/stage2_variations")
+      .select("variation").distinct().count()
+    assert(nVar == 35, s"expected 35 variants (nominal + 22 JES + 12 JER), got $nVar")
+
+    // ---- stage 3: yields + datacards, from the read-back histograms,
+    // equal the registry's s04 over the raw tables
+    val yields = StageQueries.queries("s04_stage3_templates")(spark, dir)
+    val vbfHPeak = yields.filter(col("region") === "h-peak" &&
+        col("channel") === "vbf").collect()(0)
+    assert(approx(vbfHPeak.getAs[Float]("yield_nominal").toDouble, 134.62532),
+      s"stage-3 golden yield: ${vbfHPeak.getAs[Float]("yield_nominal")}")
+    val expected = Datacards.renderAll(yields)
+    val cards = expected.keys.map { r =>
+      r -> Files.readString(Paths.get(s"$out/stage3_datacards/$r.txt"))
+    }.toMap
+    assert(Paths.get(s"$out/stage3_datacards").toFile.list().length == 3)
+    assert(cards == expected, "pipeline datacards diverge from s04's")
+    assert(cards.keySet == Set("z-peak", "h-sidebands", "h-peak"))
+    assert(cards("h-peak").contains("134.6253"),
+      s"golden yield missing from rendered datacard:\n${cards("h-peak")}")
+    assert(cards("h-peak").contains("jes lnN"), "nuisance line missing")
+    val nomSum = hist.filter(col("variation") === "nominal")
       .agg(sum(col("value"))).head.getDouble(0)
     val yieldSum = yields.agg(sum(col("yield_nominal"))).head.getDouble(0)
     assert(math.abs(nomSum - yieldSum) / yieldSum < 1e-5,
       s"stage2 hist total $nomSum != stage3 yields $yieldSum")
 
-    // stage-3: one datacard per region present in the yields
-    val regions = yields.select("region").distinct().collect().map(_.getString(0))
-    regions.foreach { r =>
-      assert(Files.exists(Paths.get(s"$out/stage3_datacards/$r.txt")))
-    }
+    assert(Files.size(Paths.get(s"$out/stage3_templates.root")) > 0)
+    assert(Paths.get(s"$out/stage3_plots").toFile.list().exists(_.endsWith(".svg")))
+  }
 
-    // stage-2 variation table carries the full reference width
-    val variations = queries.StageQueries.queries("s06_variation_fanout")(spark, dir)
-    variations.write.mode("overwrite").parquet(s"$out/stage2_variations")
-    val nVar = spark.read.parquet(s"$out/stage2_variations")
-      .select("variation").distinct().count()
-    assert(nVar == 35, s"expected 35 variants (nominal + 22 JES + 12 JER), got $nVar")
+  test("RunPipeline.run: a failing branch fails the run after every branch stops") {
+    // lineitem only: branches A-C run to completion, D (s12) needs orders
+    val in = Files.createTempDirectory("graft_pipeline_in")
+    Files.copy(Paths.get(s"$dir/lineitem.parquet"), in.resolve("lineitem.parquet"))
+    val out = Files.createTempDirectory("graft_pipeline").toString
+    val e = intercept[Exception](RunPipeline.run(spark, in.toString, out))
+    assert(e.getMessage.contains(s"$in/orders.parquet"), e.getMessage)
+    GraftBridge.drainListenerBus(spark.sparkContext, 10000L)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a branch still had jobs running after run threw")
+    Seq("stage2_unbinned", "stage2_histograms", "stage2_variations").foreach { t =>
+      assert(Files.exists(Paths.get(s"$out/$t/_SUCCESS")), s"$t not written")
+    }
   }
 }

@@ -70,4 +70,16 @@ class SortedLowerCountSpec extends SparkSpec {
     assert(r.getInt(1) == 0)
     assert(r.getInt(2) == lows.length)
   }
+
+  test("SQL surface: a NULL lows literal fails analysis with a clear error") {
+    graft.plans.GraftFunctions.register(spark)
+    val e = intercept[Exception] {
+      spark.range(1).selectExpr(
+        "sorted_lower_count(0.5D, CAST(NULL AS ARRAY<DOUBLE>)) AS a")
+    }
+    val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalArgumentException => x }
+    assert(iae.exists(_.getMessage.contains("non-NULL array literal")),
+      s"expected an IllegalArgumentException, got $e")
+  }
 }
