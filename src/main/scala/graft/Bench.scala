@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric","value","unit","queries","sf"}.
   *
-  * Session mirrors the target deployment shape (local[32], 32 shuffle
-  * partitions, AQE on): partition counts sized to cores — not Spark's
-  * 200 default, which would fragment the small-SF runs — and AQE
-  * coalescing/skew handling enabled as it would be on a real cluster.
+  * Session: [[GraftSession]] at local[SPARK_GRAFT_CPUS] (default 32, the
+  * target deployment shape) — partition counts sized to cores, AQE on,
+  * and a codegen cache that holds the whole suite for the rerun pass.
   */
 object Bench {
 
@@ -95,32 +95,40 @@ object Bench {
     * number. */
   private val CalibNominalSec = 3.27
 
+  /** Per-query prior times from a previous Bench record (the
+    * BENCH_LOCAL.json text), or empty when it was taken at another scale
+    * factor than `sfDir`. Both the "queries" and "reruns" objects are
+    * read and min-merged: under the round-10 format "queries" held the
+    * steady min and "reruns" the slow first pass, under the current
+    * format it is the reverse — min() yields the steady-state quiet
+    * time per query in either case. */
+  def priorSteadyTimes(priorJson: String, sfDir: String): Map[String, Double] = {
+    val root = new ObjectMapper().readTree(priorJson)
+    if (root.path("sf").asText() != sfDir) Map.empty
+    else {
+      def obj(key: String): Map[String, Double] =
+        root.path(key).properties().asScala.collect {
+          case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble()
+        }.toMap
+      val qObj = obj("queries")
+      val rObj = obj("reruns")
+      (qObj.keySet ++ rObj.keySet).iterator.map { k =>
+        k -> math.min(qObj.getOrElse(k, Double.MaxValue),
+          rObj.getOrElse(k, Double.MaxValue))
+      }.toMap
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val calibBefore = calibProbe()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val mcThreads =
-      math.max(2, math.min(scala.util.Try(cpus.toInt).getOrElse(32), 32))
+    val cpus = GraftSession.cpus(32)
+    // more probe threads than the host has cores would measure the
+    // oversubscription itself, not the host's contention
+    val availableProcessors = Runtime.getRuntime.availableProcessors()
+    val mcThreads = math.min(math.max(2, math.min(cpus, 32)), availableProcessors)
     val calibMcBefore = calibProbeMc(mcThreads)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The 360-query suite compiles ~5-6k distinct codegen fragments;
-      // the default 100-entry compiled-class cache (static conf) evicts
-      // every one of them long before the tail-determinism rerun pass,
-      // so each rerun re-pays the janino compile it is trying to
-      // exclude (r15 measurement: ~100 flagged queries saved ~1 s each
-      // on rerun, a large part of it compile). Sized to hold the whole
-      // suite; same benefit for any production session that repeats
-      // its query shapes. First-pass times are unaffected (cold cache
-      // either way).
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain(cpus, "WARN")
     // warm the JVM/codegen paths once so the first measured query does
     // not absorb session startup
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -226,39 +234,11 @@ object Bench {
     // Prior per-query times from the last committed same-SF run
     // (BENCH_LOCAL.json, read BEFORE this run overwrites it): feeds
     // both the rerun criteria below and the load_factor stamp.
-    // Parsing is scoped to the named {"q":t,...} objects (a bare
-    // name:number regex over the whole file would also match the
-    // "reruns" object, and toMap keeps the LAST match — round-10's
-    // committed format put slow first-pass times there, so a re-run
-    // query's prior resolved to its excursion value and the 2× trigger
-    // went soft on exactly the wobbly queries). Both objects are
-    // parsed and min-merged: under the round-10 format "queries" held
-    // the steady min and "reruns" the slow first pass; under the
-    // current format it is the reverse — min() yields the steady-state
-    // quiet time per query in either case.
     val priorTimes: Map[String, Double] = try {
       val p = java.nio.file.Paths.get("BENCH_LOCAL.json")
-      if (java.nio.file.Files.exists(p)) {
-        val prior = java.nio.file.Files.readString(p)
-        val priorSf = """"sf":"([^"]+)"""".r
-          .findFirstMatchIn(prior).map(_.group(1))
-        if (priorSf.contains(sfDir)) {
-          def obj(key: String): Map[String, Double] =
-            (s""""$key":\\{([^}]*)\\}""").r
-              .findFirstMatchIn(prior).map(_.group(1)) match {
-              case Some(body) =>
-                """"([a-z0-9_]+)":([0-9.Ee+-]+)""".r.findAllMatchIn(body)
-                  .map(m => m.group(1) -> m.group(2).toDouble).toMap
-              case None => Map.empty[String, Double]
-            }
-          val qObj = obj("queries")
-          val rObj = obj("reruns")
-          (qObj.keySet ++ rObj.keySet).iterator.map { k =>
-            k -> math.min(qObj.getOrElse(k, Double.MaxValue),
-              rObj.getOrElse(k, Double.MaxValue))
-          }.toMap
-        } else Map.empty[String, Double]
-      } else Map.empty[String, Double]
+      if (java.nio.file.Files.exists(p))
+        priorSteadyTimes(java.nio.file.Files.readString(p), sfDir)
+      else Map.empty[String, Double]
     } catch { case _: Throwable => Map.empty[String, Double] }
     // Tail-determinism pass: JIT/C2-compilation excursions concentrate
     // in a handful of queries (round-9 driver artifact: u28 1.7→16.8 s,
@@ -355,7 +335,6 @@ object Bench {
           .drainListenerBus(spark.sparkContext, 2000L)
         listener.snapshot() // keep exec_metrics per-query exact
         try {
-          import scala.jdk.CollectionConverters._
           java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
             .sorted(java.util.Comparator.reverseOrder())
             .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
@@ -405,6 +384,7 @@ object Bench {
       f""""calib_before_sec":$calibBefore%.3f,"calib_after_sec":$calibAfter%.3f,""" +
         f""""calib_sec":$calibSec%.3f,"calib_nominal_sec":$CalibNominalSec%.2f,""" +
         f""""calib_mc_sec":$calibMcSec%.3f,"calib_mc_threads":$mcThreads,""" +
+        f""""available_processors":$availableProcessors,""" +
         f""""calib_mc_factor":$calibMcFactor%.3f,""" +
         f""""value_normalized":$valueNormalized%.1f,""" +
         f""""value_steady_normalized":$valueSteadyNormalized%.1f"""

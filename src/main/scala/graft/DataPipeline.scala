@@ -25,8 +25,7 @@ object DataPipeline {
   private val P = 2147483647L
 
   def curate(spark: SparkSession, sfDir: String): (DataFrame, Seq[(String, Long)]) = {
-    graft.plans.GraftFunctions.register(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    GraftSession.attach(spark)
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
       .repartition(spark.sparkContext.defaultParallelism)
     val stats = Seq.newBuilder[(String, Long)]
@@ -144,12 +143,7 @@ object DataPipeline {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = GraftSession.builder(s"local[$cpus]", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.attach(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain(GraftSession.cpus(8), "WARN")
     val (packed, stats) = curate(spark, sfDir)
     packed.write.mode("overwrite").partitionBy("source").parquet(s"$outDir/corpus")
     stats.foreach { case (k, v) => println(s"[data-pipeline] $k: $v") }

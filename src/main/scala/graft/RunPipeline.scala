@@ -22,12 +22,7 @@ object RunPipeline {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = GraftSession.builder(s"local[$cpus]", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.attach(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain(GraftSession.cpus(8), "WARN")
     run(spark, sfDir, outDir)
     spark.stop()
   }

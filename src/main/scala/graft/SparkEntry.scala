@@ -86,9 +86,13 @@ object SparkEntry {
       col("wgt"), 0.0, 160.0, 40)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each runs
+    * `GraftSession.attach` first, so a session built anywhere (a
+    * caller's own included) has the native functions and nanosAsLong. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    families.map(_.queries).reduce(_ ++ _)
+    families.map(_.queries).reduce(_ ++ _).map { case (name, fn) =>
+      name -> { (s: SparkSession, dir: String) => GraftSession.attach(s); fn(s, dir) }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

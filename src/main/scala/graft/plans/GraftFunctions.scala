@@ -2,64 +2,43 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{CreateArray, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, Decimal, DoubleType}
 
-/** Runtime registration of graft's native functions into an existing
-  * session — the path for sessions not built with GraftExtensions
-  * (e.g. the driver's). Idempotent. */
+/** graft's native SQL functions, as one table. [[GraftExtensions]]
+  * injects every entry at session build; [[register]] adds the entries
+  * an already-built session lacks (the path `GraftSession.attach` takes
+  * for sessions not built with the extensions, e.g. a caller's own). */
 object GraftFunctions {
+
+  /** One native function: its SQL name, the expression class its
+    * ExpressionInfo documents, and the builder the analyzer calls. */
+  final case class Native(name: String, exprClass: Class[_],
+                          builder: Seq[Expression] => Expression) {
+    def id: FunctionIdentifier = FunctionIdentifier(name)
+    def info: ExpressionInfo = new ExpressionInfo(exprClass.getName, name)
+  }
 
   private def evalDouble(e: Expression): Double = e.eval(null) match {
     case v: Number => v.doubleValue()
-    case v: org.apache.spark.sql.types.Decimal => v.toDouble
+    case v: Decimal => v.toDouble
     case other => throw new IllegalArgumentException(
       s"expected numeric literal, got $other")
   }
 
-  val deltaRBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 4, "delta_r(eta1, phi1, eta2, phi2)")
-    DeltaRExpr(children(0), children(1), children(2), children(3))
-  }
-
-  val weightedHistogramBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 5,
-      "weighted_histogram(value, weight, lo, hi, nbins)")
-    WeightedHistogramAgg(children(0), children(1), evalDouble(children(2)),
-      evalDouble(children(3)), evalDouble(children(4)).toInt)
-      .toAggregateExpression()
-  }
-
-  val sortedIntersectBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "sorted_intersect_count(a, b)")
-    SortedIntersectCount(children(0), children(1))
-  }
-
-  val arrayDotBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "array_dot(a, b)")
-    ArrayDotProduct(children(0), children(1))
-  }
-
-  val minHashSigBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "minhash_sig(shingles, n_perm)")
-    MinHashSignature(children(0), evalDouble(children(1)).toInt)
-  }
-
-  val shingleSetBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "shingle_set(text, k)")
-    ShingleHashSet(children(0), evalDouble(children(1)).toInt)
-  }
+  private def evalInt(e: Expression): Int = evalDouble(e).toInt
 
   // weights/bias arrive as foldable array(...) literals; element-wise eval
   // (rather than evaluating the CreateArray whole) sidesteps type-coercion
   // of mixed-precision decimal literals, which only runs later in analysis
   private def evalDoubleArray(e: Expression): Seq[Double] = e match {
-    case ca: org.apache.spark.sql.catalyst.expressions.CreateArray =>
-      ca.children.map(evalDouble)
+    case ca: CreateArray => ca.children.map(evalDouble)
     case other if other.foldable => other.eval(null) match {
-      case ad: org.apache.spark.sql.catalyst.util.ArrayData =>
-        ad.toObjectArray(org.apache.spark.sql.types.DoubleType).toSeq.map {
+      case ad: ArrayData =>
+        ad.toObjectArray(DoubleType).toSeq.map {
           case d: java.lang.Double => d.doubleValue()
-          case d: org.apache.spark.sql.types.Decimal => d.toDouble
+          case d: Decimal => d.toDouble
           case n: Number => n.doubleValue()
         }
       case other => throw new IllegalArgumentException(
@@ -69,184 +48,84 @@ object GraftFunctions {
       s"mlp_dense weights/bias must be foldable array literals, got $other")
   }
 
-  val mlpDenseBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 4, "mlp_dense(input, weights, bias, tanh)")
-    MlpDenseChunked(children(0), evalDoubleArray(children(1)),
-      evalDoubleArray(children(2)),
-      children(3).eval(null).asInstanceOf[Boolean])
-  }
-
-  val kmvMinimaBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "kmv_minima(hash, k)")
-    KmvMinima(children(0), evalDouble(children(1)).toInt).toAggregateExpression()
-  }
-
-  val topkMaxBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 3, "topk_max(sort, payload, k)")
-    TopKPairs(children(0), children(1), evalDouble(children(2)).toInt)
-      .toAggregateExpression()
-  }
-
-  val cdcBoundsBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 3, "cdc_bounds(text, window, mask)")
-    CdcBounds(children(0), evalDouble(children(1)).toInt,
-      evalDouble(children(2)).toInt)
-  }
-
-  val hllRegistersBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "hll_registers(hash, p)")
-    HllRegisters(children(0), evalDouble(children(1)).toInt)
-      .toAggregateExpression()
-  }
-
-  val qsketchBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1, "qsketch_buckets(value)")
-    LogQuantileSketch(children(0)).toAggregateExpression()
-  }
-
-  val hllEstimateBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1, "hll_estimate(regs)")
-    HllEstimate(children(0))
-  }
-
-  val phashHashBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1, "phash_hash(blob)")
-    PhashHash(children(0))
-  }
-
-  val pcmDecodeBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1, "pcm_decode(blob)")
-    PcmDecode(children(0))
-  }
-
-  val byteValuesBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1, "byte_values(blob)")
-    ByteValues(children(0))
-  }
-
-  val sortedLowerCountBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "sorted_lower_count(x, sorted_lows_array)")
-    require(children(1).foldable,
+  private def sortedLows(e: Expression): Seq[Double] = {
+    require(e.foldable,
       "sorted_lower_count: lows must be a literal (foldable) array")
-    val et = children(1).dataType match {
-      case org.apache.spark.sql.types.ArrayType(e, _) => e
+    val et = e.dataType match {
+      case ArrayType(t, _) => t
       case other => throw new IllegalArgumentException(
         s"sorted_lower_count: second arg must be an array, got $other")
     }
-    val lowsData = children(1).eval()
+    val lowsData = e.eval()
     if (lowsData == null) throw new IllegalArgumentException(
       "sorted_lower_count: lows must be a non-NULL array literal")
-    val lows = lowsData
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toObjectArray(et)
-      .map {
-        case d: org.apache.spark.sql.types.Decimal => d.toDouble
-        case n: Number => n.doubleValue()
-        case other => throw new IllegalArgumentException(
-          s"sorted_lower_count: non-numeric lows element $other")
-      }.toSeq
-    SortedLowerCount(children(0), lows)
+    lowsData.asInstanceOf[ArrayData].toObjectArray(et).map {
+      case d: Decimal => d.toDouble
+      case n: Number => n.doubleValue()
+      case other => throw new IllegalArgumentException(
+        s"sorted_lower_count: non-numeric lows element $other")
+    }.toSeq
   }
 
-  val jaroWinklerBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "jaro_winkler(a, b)")
-    JaroWinklerExpr(children(0), children(1))
-  }
+  /** `Native` whose builder checks the argument count against `usage`. */
+  private def native(name: String, exprClass: Class[_], arity: Int, usage: String)(
+      build: Seq[Expression] => Expression): Native =
+    Native(name, exprClass, { c => require(c.size == arity, usage); build(c) })
 
-  val withinRadiusBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 5, "within_radius(ax, ay, bx, by, r)")
-    WithinRadius(children(0), children(1), children(2), children(3), children(4))
-  }
+  val natives: Seq[Native] = Seq(
+    native("delta_r", classOf[DeltaRExpr], 4, "delta_r(eta1, phi1, eta2, phi2)") {
+      c => DeltaRExpr(c(0), c(1), c(2), c(3)) },
+    native("weighted_histogram", classOf[WeightedHistogramAgg], 5,
+        "weighted_histogram(value, weight, lo, hi, nbins)") { c =>
+      WeightedHistogramAgg(c(0), c(1), evalDouble(c(2)), evalDouble(c(3)),
+        evalInt(c(4))).toAggregateExpression() },
+    native("sorted_intersect_count", classOf[SortedIntersectCount], 2,
+        "sorted_intersect_count(a, b)") { c => SortedIntersectCount(c(0), c(1)) },
+    native("array_dot", classOf[ArrayDotProduct], 2, "array_dot(a, b)") {
+      c => ArrayDotProduct(c(0), c(1)) },
+    native("minhash_sig", classOf[MinHashSignature], 2, "minhash_sig(shingles, n_perm)") {
+      c => MinHashSignature(c(0), evalInt(c(1))) },
+    native("shingle_set", classOf[ShingleHashSet], 2, "shingle_set(text, k)") {
+      c => ShingleHashSet(c(0), evalInt(c(1))) },
+    native("mlp_dense", classOf[MlpDenseChunked], 4, "mlp_dense(input, weights, bias, tanh)") {
+      c => MlpDenseChunked(c(0), evalDoubleArray(c(1)), evalDoubleArray(c(2)),
+        c(3).eval(null).asInstanceOf[Boolean]) },
+    native("kmv_minima", classOf[KmvMinima], 2, "kmv_minima(hash, k)") {
+      c => KmvMinima(c(0), evalInt(c(1))).toAggregateExpression() },
+    native("topk_max", classOf[TopKPairs], 3, "topk_max(sort, payload, k)") {
+      c => TopKPairs(c(0), c(1), evalInt(c(2))).toAggregateExpression() },
+    native("cdc_bounds", classOf[CdcBounds], 3, "cdc_bounds(text, window, mask)") {
+      c => CdcBounds(c(0), evalInt(c(1)), evalInt(c(2))) },
+    native("hll_registers", classOf[HllRegisters], 2, "hll_registers(hash, p)") {
+      c => HllRegisters(c(0), evalInt(c(1))).toAggregateExpression() },
+    native("qsketch_buckets", classOf[LogQuantileSketch], 1, "qsketch_buckets(value)") {
+      c => LogQuantileSketch(c(0)).toAggregateExpression() },
+    native("hll_estimate", classOf[HllEstimate], 1, "hll_estimate(regs)") {
+      c => HllEstimate(c(0)) },
+    native("phash_hash", classOf[PhashHash], 1, "phash_hash(blob)") {
+      c => PhashHash(c(0)) },
+    native("pcm_decode", classOf[PcmDecode], 1, "pcm_decode(blob)") {
+      c => PcmDecode(c(0)) },
+    native("byte_values", classOf[ByteValues], 1, "byte_values(blob)") {
+      c => ByteValues(c(0)) },
+    native("sorted_lower_count", classOf[SortedLowerCount], 2,
+        "sorted_lower_count(x, sorted_lows_array)") {
+      c => SortedLowerCount(c(0), sortedLows(c(1))) },
+    native("jaro_winkler", classOf[JaroWinklerExpr], 2, "jaro_winkler(a, b)") {
+      c => JaroWinklerExpr(c(0), c(1)) },
+    native("within_radius", classOf[WithinRadius], 5, "within_radius(ax, ay, bx, by, r)") {
+      c => WithinRadius(c(0), c(1), c(2), c(3), c(4)) },
+    native("hyperplane_bands", classOf[HyperplaneBands], 5,
+        "hyperplane_bands(embedding, n_tables, band_bits, dims, seed_base)") { c =>
+      HyperplaneBands(c(0), evalInt(c(1)), evalInt(c(2)), evalInt(c(3)), evalInt(c(4))) }
+  )
 
-  val hyperplaneBandsBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 5,
-      "hyperplane_bands(embedding, n_tables, band_bits, dims, seed_base)")
-    HyperplaneBands(children(0), evalDouble(children(1)).toInt,
-      evalDouble(children(2)).toInt, evalDouble(children(3)).toInt,
-      evalDouble(children(4)).toInt)
-  }
-
+  /** Register the natives the session's registry lacks; a name already
+    * present (from the extensions or an earlier call) is left as is. */
   def register(s: SparkSession): Unit = synchronized {
     val reg = s.sessionState.functionRegistry
-    reg.registerFunction(
-      new FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerExpr].getName, "jaro_winkler"),
-      jaroWinklerBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("within_radius"),
-      new ExpressionInfo(classOf[WithinRadius].getName, "within_radius"),
-      withinRadiusBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("hyperplane_bands"),
-      new ExpressionInfo(classOf[HyperplaneBands].getName, "hyperplane_bands"),
-      hyperplaneBandsBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("delta_r"),
-      new ExpressionInfo(classOf[DeltaRExpr].getName, "delta_r"),
-      deltaRBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      sortedIntersectBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("array_dot"),
-      new ExpressionInfo(classOf[ArrayDotProduct].getName, "array_dot"),
-      arrayDotBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("weighted_histogram"),
-      new ExpressionInfo(classOf[WeightedHistogramAgg].getName, "weighted_histogram"),
-      weightedHistogramBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),
-      minHashSigBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("shingle_set"),
-      new ExpressionInfo(classOf[ShingleHashSet].getName, "shingle_set"),
-      shingleSetBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("mlp_dense"),
-      new ExpressionInfo(classOf[MlpDenseChunked].getName, "mlp_dense"),
-      mlpDenseBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("kmv_minima"),
-      new ExpressionInfo(classOf[KmvMinima].getName, "kmv_minima"),
-      kmvMinimaBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("topk_max"),
-      new ExpressionInfo(classOf[TopKPairs].getName, "topk_max"),
-      topkMaxBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("cdc_bounds"),
-      new ExpressionInfo(classOf[CdcBounds].getName, "cdc_bounds"),
-      cdcBoundsBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("hll_registers"),
-      new ExpressionInfo(classOf[HllRegisters].getName, "hll_registers"),
-      hllRegistersBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("qsketch_buckets"),
-      new ExpressionInfo(classOf[LogQuantileSketch].getName, "qsketch_buckets"),
-      qsketchBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("hll_estimate"),
-      new ExpressionInfo(classOf[HllEstimate].getName, "hll_estimate"),
-      hllEstimateBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("phash_hash"),
-      new ExpressionInfo(classOf[PhashHash].getName, "phash_hash"),
-      phashHashBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("pcm_decode"),
-      new ExpressionInfo(classOf[PcmDecode].getName, "pcm_decode"),
-      pcmDecodeBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("byte_values"),
-      new ExpressionInfo(classOf[ByteValues].getName, "byte_values"),
-      byteValuesBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("sorted_lower_count"),
-      new ExpressionInfo(classOf[SortedLowerCount].getName, "sorted_lower_count"),
-      sortedLowerCountBuilder)
+    natives.foreach { n =>
+      if (!reg.functionExists(n.id)) reg.registerFunction(n.id, n.info, n.builder)
+    }
   }
 }

@@ -456,7 +456,6 @@ object StreamQueries extends QueryFamily {
   // convention: streaming answers must equal the batch answers).
   private def n14(s: SparkSession, dir: String): DataFrame =
     Streams.withDriveConfs(s, statePartitions(s)) {
-      graft.plans.GraftFunctions.register(s)
       val schema = s.read.parquet(s"$dir/events.parquet").schema
       val name = fresh("graft_stream_dnn")
       // the ensemble as a 4-way filtered UNION, not one 4-branch

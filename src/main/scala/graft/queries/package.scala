@@ -19,9 +19,10 @@ package object queries {
     * `timeZoneId = UTC` instead — the same interpretation DuckDB's
     * `epoch_ns(TIMESTAMP)` uses for naive timestamps — making the
     * conversion self-contained: correct on any session regardless of
-    * its timezone, with no session-state mutation. (Sessions built by
-    * GraftSession/Verify/Bench/SparkSpec still pin UTC at construction
-    * as the documented invariant for user-written time logic.) The
+    * its timezone, with no session-state mutation. (`GraftSession`,
+    * which every main and SparkSpec build on, still pins UTC at
+    * construction as the documented invariant for user-written time
+    * logic.) The
     * analyzer's ResolveTimeZone only fills EMPTY timeZoneIds, so the
     * explicit UTC survives analysis. Works on batch and streaming
     * DataFrames alike (pure projection). */
@@ -64,14 +65,13 @@ package object queries {
 
     /** Read a test table. `events.parquet` has carried an INT64
       * TIMESTAMP(NANOS) column that Spark 4 refuses by default
-      * (PARQUET_TYPE_ILLEGAL); nanosAsLong is a runtime SQLConf with no
-      * per-read option form, so set it here to stay robust however the
-      * session was built. Timestamp columns named `ts` are normalized
-      * to the epoch-nanos long domain (see [[normalizeEventTs]], which
-      * carries its own UTC cast — no session mutation). */
-    protected def rd(s: SparkSession, dir: String, name: String): DataFrame = {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      * (PARQUET_TYPE_ILLEGAL); the session reads it as a long because
+      * `GraftSession` pins nanosAsLong (at build, and in `attach`,
+      * which `SparkEntry.queries` runs before every query). Timestamp
+      * columns named `ts` are normalized to the epoch-nanos long domain
+      * (see [[normalizeEventTs]], which carries its own UTC cast — no
+      * session mutation). */
+    protected def rd(s: SparkSession, dir: String, name: String): DataFrame =
       normalizeEventTs(s.read.parquet(t(dir, name)))
-    }
   }
 }

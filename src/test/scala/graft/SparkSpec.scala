@@ -11,20 +11,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The same recipe every main uses (GraftSession), so specs run on
+    * the conf set and native functions the program runs on. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // local[threads, maxTaskFailures]: allow one retry so specs can
-      // exercise task-retry semantics (AuditSinkSpec injects a failure)
-      .master("local[4,2]")
+    // local[threads, maxTaskFailures]: allow one retry so specs can
+    // exercise task-retry semantics (AuditSinkSpec injects a failure)
+    val s = GraftSession.builder("local[4,2]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // repo invariant: sessions pin UTC at construction so timestamp
-      // casts (NTZ→epoch in normalizeEventTs) are timezone-stable
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    // getOrCreate ignores the extensions if another spec built the
+    // session first
+    GraftSession.attach(s)
     s
   }
 }

@@ -11,26 +11,40 @@ import graft.agg.Histogrammer
 class ExtensionsSpec extends AnyFunSuite {
 
   // getOrCreate may return a pre-existing session (shared test JVM), in
-  // which case withExtensions is ignored — register at runtime instead,
-  // which is also the path the driver's session uses.
+  // which case withExtensions is ignored — attach at runtime instead,
+  // which is also the path a caller's own session takes. Every session the
+  // specs build comes from GraftSession.builder, so whichever spec built
+  // it, the session carries GraftExtensions.
   private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = graft.GraftSession.builder("local[4]", 4)
       .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(s)
+    graft.GraftSession.attach(s)
     s
   }
 
+  private val names = GraftFunctions.natives.map(_.name)
+
   test("GraftSession.attach registers all native functions on an existing session") {
-    graft.GraftSession.attach(spark)
-    Seq("delta_r", "weighted_histogram", "sorted_intersect_count", "array_dot",
-        "minhash_sig")
-      .foreach(f => assert(spark.catalog.functionExists(f), s"$f missing"))
+    // a session whose registry lacks every native
+    val bare = spark.newSession()
+    GraftFunctions.natives.foreach(n => bare.sessionState.functionRegistry.dropFunction(n.id))
+    names.foreach(f => assert(!bare.catalog.functionExists(f), s"$f not dropped"))
+    graft.GraftSession.attach(bare)
+    graft.GraftSession.attach(bare) // idempotent
+    names.foreach(f => assert(bare.catalog.functionExists(f), s"$f missing after attach"))
+    assert(bare.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
+  test("every native in the table resolves on a newSession of an extension-built session") {
+    assert(names.size == 20 && names.distinct == names)
+    // a fresh session gets its registry from the builtins and the
+    // extensions alone
+    val fresh = spark.newSession()
+    names.foreach(f => assert(fresh.catalog.functionExists(f), s"$f missing on newSession"))
+    assert(fresh.sql("SELECT sorted_lower_count(CAST(2.5 AS DOUBLE), array(1.0, 2.0, 3.0))")
+      .head().getInt(0) == 2)
   }
 
   test("minhash_sig matches the composed array_min(transform(...)) form") {
